@@ -700,8 +700,8 @@ class Engine:
         ranks in 1e-9 integer units, deterministic across engines and runs.
         Node set = every id appearing as src or dst.
 
-        The returned frame is PERSISTED (the iteration checkpoints it to
-        bound lineage); the caller owns the cache — call ``.unpersist()``
+        The returned frame is PERSISTED (the kernel materializes the final
+        ranks); the caller owns the cache — call ``.unpersist()``
         when done with the ranks, or one node-set-sized cache entry stays
         pinned for the session."""
         from pyspark.sql import functions as F

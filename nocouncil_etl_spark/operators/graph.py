@@ -28,52 +28,75 @@ def pagerank_fixed_point(
     edges: DataFrame,
     n_nodes: int,
     iters: int,
-    checkpoint_every: int = 4,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank: nodes(node), edges(src, dst, d=out-degree of
     src) → (node, r) after ``iters`` synchronous iterations.
 
-    r_{k+1}(v) = (0.15/N) + 0.85 · Σ_{(u,v)∈E} r_k(u)/deg(u), all in 1e-9
-    integer units with floor division — deterministic and engine-portable.
-    Dangling mass (nodes with no out-edges) is dropped, identically on both
-    engines.
+    r_{k+1}(v) = b(v) + 0.85 · Σ_{(u,v)∈E} r_k(u)/deg(u), in 1e-9 integer
+    units with floor division — deterministic and engine-portable. Global
+    PageRank: b = 0.15/N and r_0 = 1/N everywhere. ``seeds(node, b, r)``
+    personalizes it: seed nodes take their own b and r_0, all others 0.
+    Dangling mass (nodes with no out-edges) is dropped on both engines.
 
-    Scale shape: each iteration is one equi-join (edges ⋈ ranks on src; at
-    100 TB both sides pre-partitioned on the key, so the shuffle happens
-    once, not per-iteration) + one map-side-combined sum keyed by dst + one
-    left join back to the node set. State per iteration is one row per node.
-    Every ``checkpoint_every`` iterations the state is persisted and
-    materialized and the previous checkpoint dropped — bounding both lineage
-    depth (optimizer re-analysis cost grows with plan depth) and the work a
-    task retry replays, without paying a full materialization job per
-    iteration (measured: per-iteration count() tripled wall time on small
-    graphs, where fixed job overhead dominates).
+    Pregel-style: each node's state row (node, b, r, d, dsts) carries its
+    own out-list, built once by one groupBy over ``edges``. A step unions
+    the messages explode(dsts) → (dst, r div d) with the state rows
+    themselves (they carry b, d, dsts and keep nodes without in-edges)
+    and runs ONE groupBy(node). Shuffled bytes per step ≈ |E| messages plus
+    one row per node — what an edges ⋈ ranks join moves, in one exchange
+    instead of its 3-4. The largest row is one node's out-list.
 
-    Contract: the RETURNED frame is persisted (it is the last checkpoint);
-    the caller owns that cache entry and should ``.unpersist()`` it once the
-    ranks have been consumed."""
-    base = (15 * SCALE) // (100 * n_nodes)
-    ranks = nodes.withColumn("r", F.lit(SCALE // n_nodes))
-    prev = None
-    for it in range(1, iters + 1):
-        contribs = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .select("dst", F.expr("r div d").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("c"))
-        )
-        ranks = nodes.join(contribs, nodes["node"] == contribs["dst"], "left").select(
+    Every state is localCheckpointed lazily (under AQE its shuffle stage
+    runs at that call, so this adds no job), so each step plans a
+    constant-size tree. Trade-off, as for HITS and LPA: a lost executor
+    fails the query instead of recomputing it from lineage.
+
+    Contract: the returned (node, r) frame is persisted and materialized,
+    and every step checkpoint is released; the caller owns the cache
+    entry (``.unpersist()`` or ``clearCache()`` frees it)."""
+    if seeds is None:
+        state = nodes.select(
             "node",
-            (
-                F.lit(base) + F.expr(f"({DAMP_NUM} * coalesce(c, 0L)) div {DAMP_DEN}")
-            ).alias("r"),
+            F.lit((15 * SCALE) // (100 * n_nodes)).alias("b"),
+            F.lit(SCALE // n_nodes).alias("r"),
         )
-        if it % checkpoint_every == 0 or it == iters:
-            ranks = ranks.persist()
-            ranks.count()  # materialize so dropping the parent is safe
-            if prev is not None:
-                prev.unpersist()
-            prev = ranks
+    else:
+        state = nodes.join(seeds, "node", "left").select(
+            "node",
+            F.coalesce("b", F.lit(0)).cast("long").alias("b"),
+            F.coalesce("r", F.lit(0)).cast("long").alias("r"),
+        )
+    adj = edges.groupBy(F.col("src").alias("node")).agg(
+        F.collect_list("dst").alias("dsts"), F.first("d").alias("d")
+    )
+    state = state.join(adj, "node", "left").localCheckpoint(eager=False)
+    steps = [state]
+    for _ in range(iters):
+        msgs = state.select(
+            F.explode("dsts").alias("node"), F.expr("r div d").alias("c")
+        )
+        state = (
+            state.unionByName(msgs, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(
+                F.max("b").alias("b"),
+                F.expr(
+                    f"max(b) + ({DAMP_NUM} * coalesce(sum(c), 0L)) div {DAMP_DEN}"
+                ).alias("r"),
+                F.max("d").alias("d"),
+                # collect_list (not first) keeps this an object-hash
+                # aggregate: an array-typed first() forces a sort aggregate
+                F.flatten(F.collect_list("dsts")).alias("dsts"),
+            )
+            .filter(F.col("b").isNotNull())  # drops messages to non-nodes
+            .localCheckpoint(eager=False)
+        )
+        steps.append(state)
+    ranks = state.select("node", "r").persist()
+    ranks.count()  # materialize before the step checkpoints are released
+    for cp in steps:
+        _release_checkpoint(cp)
     return ranks
 
 
@@ -93,64 +116,44 @@ def hits_fixed_point(
     PageRank discipline, doubled).
 
     Scale shape: per half-step one edges⋈scores equi-join + one
-    map-side-combined sum + one left join back to the node set. The
-    normalizer max is fetched to the driver as ONE scalar per half-step
-    (the `_graph` n-count pattern) rather than crossJoined as a 1-row
-    frame: a normalizer subquery embeds the half-step's whole subtree a
-    second time, so the logical plan doubles every half-step (~4^iters
-    nodes) and Catalyst OOMs generating the tree before anything runs —
-    a scalar literal keeps plan growth linear like PageRank's. Raw
-    half-step state is persisted and materialized each iteration (the
-    max is an agg over that cache, so the scalar fetch is nearly free).
+    map-side-combined sum over sparse state (only nodes with incoming
+    contributions; densified once on the way out). The normalizer max is
+    fetched to the driver as ONE scalar per half-step rather than
+    crossJoined as a 1-row frame: a normalizer subquery embeds the
+    half-step's subtree a second time, so the plan would double every
+    half-step (~4^iters nodes) and Catalyst OOMs building it.
 
-    Lineage discipline: each half-step's raw state is materialized with an
-    EAGER ``localCheckpoint`` instead of persist+materialize — the logical
-    plan for iteration k+1 then starts from a LogicalRDD scan, so Catalyst
-    re-analyzes a constant-size tree per half-step rather than the whole
-    growing DAG (the round-5 verdict's 7.95 s headline was dominated by
-    that re-analysis + persist bookkeeping, not data). The normalizer max
-    is still fetched as ONE driver scalar per half-step over the
-    checkpointed blocks. Each round releases the PREVIOUS round's two
-    checkpoints explicitly (_release_checkpoint) — both are strictly
-    superseded once this round's are materialized, and waiting for the
-    ContextCleaner lets 2·iters node tables pile up in executor storage
-    on big graphs (the r9 advisor's star_components finding, applied
-    here too).
+    Lineage discipline: each half-step's raw state is a lazy
+    ``localCheckpoint``, so the next half-step plans from a LogicalRDD
+    scan (a constant-size tree) and the max is an agg over those blocks.
+    Each round releases the previous round's two checkpoints
+    (_release_checkpoint); waiting for the ContextCleaner lets 2·iters
+    node tables pile up in executor storage on big graphs.
 
-    Contract: the returned frame is persisted (last iteration's state);
-    the caller should ``.unpersist()`` it once consumed."""
+    Contract: the returned frame is persisted (last iteration's state)
+    and every checkpoint, the graph pins included, is released before
+    returning; the caller should ``.unpersist()`` it once consumed."""
     if iters < 1:
         raise ValueError(
             f"hits_fixed_point needs iters >= 1 (got {iters}); with zero "
             "iterations there is no auth state to report"
         )
     # Pin the graph itself: nodes/edges appear in every half-step, and an
-    # uncached edge list re-runs its whole upstream subtree (scan + union +
-    # distinct shuffle) 2·iters times. One lazy local checkpoint each —
-    # materialized by the first half-step's job — makes every later
-    # half-step start from in-memory blocks. (r11 note: a pre-partitioned
-    # edge-copy variant was measured SLOWER here — the score side is
-    # node-table-sized, so the planner broadcasts it and the edge list is
-    # never shuffle-joined in the first place; two extra cached edge
-    # copies bought nothing.)
+    # uncached edge list re-runs its whole upstream subtree 2·iters times.
+    # A pre-partitioned edge copy measured slower: the node-sized score
+    # side is broadcast, so the edge list is never shuffle-joined.
     nodes = nodes.localCheckpoint(eager=False)
     edges = edges.localCheckpoint(eager=False)
-    e_src = edges
-    e_dst = edges
-    # r11 opt (guide §2.3): half-step state is SPARSE — only nodes with
-    # incoming contributions. Nodes absent from a state frame contribute
-    # nothing to the next half-step's sums, exactly like an explicit zero
-    # row (0·h sums to 0), and max() over a set extended by zeros is
-    # unchanged (sums are non-negative; the empty case already fell back
-    # to 1 via `or 0`). The old shape LEFT-JOINED the full node table back
-    # in every half-step — 2·iters densify joins whose zeros were
-    # arithmetic no-ops. Densification now happens ONCE on the way out.
+    # Half-step state is SPARSE (only nodes with incoming contributions):
+    # an absent node contributes nothing to the next sums, exactly like a
+    # zero row, and max() over non-negative sums ignores zeros. Densify
+    # once, on the way out.
     hub = nodes.withColumn("h", F.lit(scale).cast("long"))
     auth = None
     prev_a = prev_h = None
     for _ in range(iters):
         araw = (
-            e_src.join(hub, e_src["src"] == hub["node"])
+            edges.join(hub, edges["src"] == hub["node"])
             .groupBy("dst")
             .agg(F.sum("h").alias("c"))
             .select(F.col("dst").alias("node"), F.col("c").cast("long").alias("a"))
@@ -162,7 +165,7 @@ def hits_fixed_point(
         )
 
         hraw = (
-            e_dst.join(auth, e_dst["dst"] == auth["node"])
+            edges.join(auth, edges["dst"] == auth["node"])
             .groupBy("src")
             .agg(F.sum("a").alias("c"))
             .select(F.col("src").alias("node"), F.col("c").cast("long").alias("h"))
@@ -172,9 +175,8 @@ def hits_fixed_point(
         hub = hraw.select(
             "node", F.expr(f"(h * {scale}) div {hmax}").cast("long").alias("h")
         )
-        # last round's half-step states are strictly superseded now (this
-        # round's araw/hraw are both materialized); free their blocks —
-        # the final round's pair stays live for the output join below
+        # last round's pair is superseded now that this round's is
+        # materialized; the final pair stays live for the output join
         if prev_a is not None:
             _release_checkpoint(prev_a)
             _release_checkpoint(prev_h)
@@ -191,6 +193,10 @@ def hits_fixed_point(
         .persist()
     )
     out.count()
+    # out is materialized in the cache: the graph pins and the last
+    # round's pair are superseded, and clearCache() cannot reach them
+    for cp in (nodes, edges, prev_a, prev_h):
+        _release_checkpoint(cp)
     return out
 
 

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import fan_out, load
-from nocouncil_etl_spark.operators.graph import SCALE
+from nocouncil_etl_spark.operators.graph import (
+    SCALE,
+    _release_checkpoint,
+    pagerank_fixed_point,
+)
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.plans.retrieval_plans import _TOK_SPARK, _TOK_SQL
 from nocouncil_etl_spark.registry import query
@@ -106,7 +110,9 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     """Shared LPA kernel: returns (labels(node, lab) after LPA_ROUNDS,
     persisted undirected edge frame, raw edges) — consumed by both
     graph_label_propagation and graph_modularity_score so the partition
-    under evaluation is the partition that was produced."""
+    under evaluation is the partition that was produced. The labels come
+    back persisted and materialized (modularity reads them three times)
+    with every round checkpoint released; the caller owns both caches."""
     nodes, edges, _n = _graph(spark, sf_dir)
     und = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -123,6 +129,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     )
     und.persist()
     lab = nodes.select("node", F.col("node").alias("lab"))
+    rounds = []
     for _ in range(LPA_ROUNDS):
         cnt = (
             und.join(
@@ -160,6 +167,13 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
             # doubling (lab feeds both the join and the own-label union)
             .localCheckpoint(eager=False)
         )
+        rounds.append(lab)
+    # the round checkpoints are out of clearCache()'s reach: materialize
+    # the final labels into the cache, then release every round
+    lab = lab.persist()
+    lab.count()
+    for cp in rounds:
+        _release_checkpoint(cp)
     return lab, und, edges
 
 
@@ -525,11 +539,6 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     community combine — all key-partitioned; the m normalizer is a 1-row
     broadcast."""
     lab, und, edges = _lpa_labels(spark, sf_dir)
-    # the label table feeds THREE consumers (both triangle sides + the
-    # degree sum); without materializing it each one replays the full
-    # 4-round LPA plan (measured 14 s vs ~5 s at sf0.1)
-    lab = lab.persist()
-    lab.count()
     canon = edges.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).distinct()
@@ -638,49 +647,27 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     with seed flags — non-seed nodes ranking high are the discovery
     output.
 
-    Scale shape: identical to PageRank (keyed join + map-side-combined
-    sum + left joins per iteration, one row per node of state); the seed
-    membership joins against a tiny broadcast set."""
-    nodes, edges, _ = _graph(spark, sf_dir)
+    Scale shape: operators/graph.pagerank_fixed_point with the seed set
+    as its per-node restart mass and initial rank — one exchange per
+    iteration; seed membership is the node-id predicate itself."""
+    nodes, edges, n = _graph(spark, sf_dir)
     seeds = nodes.filter(F.col("node") % PPR_SEED_MOD == 0)
     ns = seeds.count()  # one scalar — the seed-set size
-    base_seed = (15 * SCALE) // (100 * ns)
-    is_seed = F.col("s").isNotNull()
-    ranks = (
-        nodes.join(seeds.select(F.col("node").alias("s")),
-                   nodes["node"] == F.col("s"), "left")
-        .select(
+    ranks = pagerank_fixed_point(
+        nodes,
+        edges,
+        n,
+        PPR_ITERS,
+        seeds=seeds.select(
             "node",
-            F.when(is_seed, F.lit(SCALE // ns)).otherwise(F.lit(0)).alias("r"),
-        )
+            F.lit((15 * SCALE) // (100 * ns)).alias("b"),
+            F.lit(SCALE // ns).alias("r"),
+        ),
     )
-    for _ in range(PPR_ITERS):
-        contribs = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .select("dst", F.expr("r div d").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("c"))
-        )
-        ranks = (
-            nodes.join(seeds.select(F.col("node").alias("s")),
-                       nodes["node"] == F.col("s"), "left")
-            .join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(base_seed)).otherwise(F.lit(0))
-                    + F.expr("(85 * coalesce(c, 0L)) div 100")
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    out = ranks.join(
-        seeds.select(F.col("node").alias("s")), ranks["node"] == F.col("s"), "left"
-    ).select(
-        "node", F.col("s").isNotNull().alias("is_seed"), F.col("r").alias("rank_1e9")
-    )
-    w = Window.orderBy(F.desc("rank_1e9"), F.asc("node"))
-    return (
-        out.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= PPR_TOPK)
-    )
+    w = Window.orderBy(F.desc("r"), F.asc("node"))
+    return ranks.select(
+        "node",
+        (F.col("node") % PPR_SEED_MOD == 0).alias("is_seed"),
+        F.col("r").alias("rank_1e9"),
+        F.row_number().over(w).cast("int").alias("rk"),
+    ).filter(F.col("rk") <= PPR_TOPK)

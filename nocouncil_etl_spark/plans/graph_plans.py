@@ -9,8 +9,9 @@ a citation/URL link graph. (Using only the two affine maps makes the graph
 uniform vector after one step; the degree-varying rules give it a real
 stationary structure.) Three operators:
 
-- ``graph_pagerank_topk``  — 8 synchronous fixed-point PageRank iterations;
-  the oracle unrolls one CTE per iteration over the same integer arithmetic,
+- ``graph_pagerank_topk``  — 8 synchronous fixed-point PageRank iterations,
+  one groupBy per step over node rows that carry their own out-lists; the
+  oracle unrolls one CTE per iteration over the same integer arithmetic,
   so an ITERATIVE distributed algorithm gets an exact value-hash check.
 - ``graph_triangle_count`` — triangle enumeration on the canonical
   undirected edge set (a < b < c join chain).
@@ -97,9 +98,10 @@ def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]
 @query("graph_pagerank_topk", oracle=_pr_oracle())
 def graph_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 PageRank over the deterministic link graph after 8 fixed-point
-    iterations (operators/graph.pagerank_fixed_point). The oracle replays
-    the identical integer recurrence as 8 unrolled CTEs — an exact check of
-    a genuinely iterative distributed computation."""
+    iterations (operators/graph.pagerank_fixed_point: Pregel-style, one
+    exchange and a constant-size plan per step). The oracle replays the
+    identical integer recurrence as 8 unrolled CTEs — an exact check of a
+    genuinely iterative distributed computation."""
     nodes, edges, n = _graph(spark, sf_dir)
     ranks = pagerank_fixed_point(nodes, edges, n, PR_ITERS)
     top = (

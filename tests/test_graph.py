@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.plans.graph_plans import PR_ITERS, _graph
@@ -54,3 +55,30 @@ def test_triangle_count_is_stable(spark, sf_dir):
     b = REG["graph_triangle_count"].fn(spark, sf_dir).collect()[0].n_triangles
     assert a == b
     assert a >= 0
+
+
+@pytest.mark.parametrize(
+    "qname",
+    [
+        "graph_pagerank_topk",
+        "graph_hits_hubs_auth",
+        "graph_label_propagation",
+        "graph_modularity_score",
+        "graph_ppr_seeded",
+    ],
+)
+def test_iterative_graph_query_leaves_no_storage(spark, sf_dir, qname):
+    """The fixed-point kernels release every localCheckpoint they make
+    (clearCache() cannot reach those) and hand back only cache entries,
+    so build + collect + clearCache() leaves no persisted RDD behind. The
+    check is on RDD ids, not the map's size: the ContextCleaner may free
+    another test's leftovers meanwhile, which would hide a leak in a
+    count."""
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persisted()
+    assert REG[qname].fn(spark, sf_dir).collect()
+    spark.catalog.clearCache()
+    assert persisted() - before == set()
